@@ -8,23 +8,27 @@ Run from the repository root. It compiles the engine and the harness
 (perfbench/build.py), generates the workload's fixture from the seed into
 .bench_build/fixtures (cached), runs the harness in one JVM on local[nproc]
 with one closed-loop client, checks every output outside the timed region
-(DuckDB oracles, fingerprints stable across passes, row-read aggregates
-against DuckDB), and prints one JSON object as the last line of stdout:
-end-to-end metrics with --trace 0, per-layer metrics with --trace 1.
-`--selftest` runs the full-evaluation plan check on q10, q33 and q41 and
-exits non-zero if the timed plans lose their final sort or an aggregate.
+(DuckDB oracles, fingerprints stable across two executions and across runs,
+row-read aggregates, nested fields included, against DuckDB), and prints one
+JSON object as the last line of stdout: end-to-end metrics with --trace 0,
+per-layer metrics with --trace 1. `--selftest` times q10, q33 and q41 once,
+traced, and exits non-zero if the plans their timed action executed lost
+the final sort, an output column or an aggregate.
 
 Workloads (perfbench/RESULTS.md has sizes, metric definitions and figures):
-  rowread  a seeded multi-file dataset in the reference reader's test shape,
-           read through ParquetRowReader: getRows(), getRows(cols), tuned(..).
-  adhoc    one query of every query module plus q40, q41 and q173, fully
-           evaluated on a generated star schema, and row reads of lineitem;
-           the seed orders the warm passes.
+  rowread  a seeded two-file dataset in the reference reader's test shape,
+           read through ParquetRowReader: getRows(), getRows(cols) and
+           tuned(..).getRows(cols).
+  adhoc    one query of every query module plus q40, q41, q173 and q43,
+           fully evaluated on a generated star schema, q21's Structured
+           Streaming twin, and row reads of lineitem; the seed orders the
+           warm passes.
 """
 import argparse
 import glob
 import json
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -38,7 +42,9 @@ import build  # noqa: E402
 
 BUILD = build.BUILD_DIR
 
-ROWREAD = dict(files=8, rows_per_file=250, fields=50)
+# The reference's bulk shape has 10,000 rows of 50 fields per file; the
+# dataset is made smaller by having fewer files, not fewer rows per file.
+ROWREAD = dict(files=2, rows_per_file=10000, fields=50)
 ADHOC_SF = 0.005
 DATA_SEED = 42
 
@@ -57,10 +63,13 @@ ADHOC_QUERIES = [
     "q190",   # EvalQueries
     "q203",   # ExperimentQueries
     "q227",   # CurationQueries
+    "q43",    # as-of join through graft.plans.AsOfJoin's own plan node
+    "stream:q21",  # q21's Structured Streaming twin, run to completion
 ]
-# Each row read appears three times so a pass yields several samples of it.
+# A row read of lineitem lasts 0.1 to 0.3 s, so each appears four times a
+# pass to give its rate enough read time.
 ADHOC_ROWS = ["rows:all:lineitem.parquet",
-              "rows:proj:lineitem.parquet:l_orderkey+l_partkey+l_quantity+l_extendedprice"] * 3
+              "rows:proj:lineitem.parquet:l_orderkey+l_partkey+l_quantity+l_extendedprice"] * 4
 
 PLANCHECK = ["q10", "q33", "q41"]
 
@@ -144,7 +153,9 @@ def operations(workload, data):
         for f, shape in fields.items():
             by_shape.setdefault(shape, []).append(f)
         proj = by_shape["string"][:2] + by_shape["int"][:2] + by_shape["float"][:1]
-        return ["rows:all:.", "rows:proj:.:" + "+".join(proj), "rows:tuned:."]
+        # a projected read is short (about 0.3 s), so it runs four times a
+        # pass to give its rate enough samples
+        return ["rows:all:.", "rows:tuned:.:" + "+".join(proj)] + ["rows:proj:.:" + "+".join(proj)] * 4
     return ADHOC_QUERIES + ADHOC_ROWS
 
 
@@ -177,6 +188,10 @@ def run_jvm(cmd, log_path, deadline):
 
 # ---------------------------------------------------------------- checks
 
+# Cached answers live beside the fixture's files; Spark's file listing skips
+# names that start with "_", so a row read of the fixture directory does not.
+CHECKS = "_checks"
+
 def duck(data):
     import duckdb
     con = duckdb.connect()
@@ -191,7 +206,7 @@ def oracle_mismatch(con, data, name, sql, out):
     engine's oracle gate does: columns by sorted name, dtypes, shape, values.
     DuckDB's answer is cached per fixture."""
     import pandas as pd
-    cache = os.path.join(data, "oracle", name + ".pkl")
+    cache = os.path.join(data, CHECKS, "oracle", name + ".pkl")
     if os.path.exists(cache):
         o = pd.read_pickle(cache)
     else:
@@ -217,21 +232,52 @@ def oracle_mismatch(con, data, name, sql, out):
     return None
 
 
-def row_truth(con, data, op):
-    """DuckDB's per-column aggregates over the files a row read covered."""
-    cache = os.path.join(data, "rowtruth.json")
+def steps(path):
+    """`field_7[].sub_field_4[]` -> ['field_7', '[]', 'sub_field_4', '[]']"""
+    return [t for t in re.split(r"(\[\]|\.)", path) if t and t != "."]
+
+
+AGG_SQL = {"sum": "sum({})", "fsum": "sum({})", "len": "sum(length({}))",
+           "elems": "sum(len({}))", "count": "count({})"}
+
+
+def row_truth(con, data, name, path, cols, aggs):
+    """DuckDB's row count and aggregates over the files a row read covered,
+    for the (path, kind) pairs the read reported; cached per fixture. A path
+    through lists is computed over the unnested elements."""
+    cache = os.path.join(data, CHECKS, "rowtruth.json")
     truth = json.load(open(cache)) if os.path.exists(cache) else {}
-    key = op["name"] + "|" + "+".join(op["cols"])
+    key = name + "|" + "+".join(cols)
     if key not in truth:
-        path = op["path"]
-        src = f"read_parquet('{path}/*.parquet')" if os.path.isdir(path) else f"read_parquet('{path}')"
-        exprs = ["count(*)"]
-        for c, kind in op["kinds"]:
-            q = '"' + c + '"'
-            exprs.append({"sum": f"sum({q})", "fsum": f"sum({q})", "len": f"sum(length({q}))",
-                          "elems": f"sum(len({q}))", "count": f"count({q})"}[kind])
-        row = con.sql(f"SELECT {', '.join(exprs)} FROM {src}").fetchone()
-        truth[key] = [float(v) if isinstance(v, float) else int(v or 0) for v in row]
+        os.makedirs(os.path.dirname(cache), exist_ok=True)
+        glob_ = f"{path}/*.parquet" if os.path.isdir(path) else path
+        src = f"read_parquet('{glob_}')"
+        vals = {"rows": con.sql(f"SELECT count(*) FROM {src}").fetchone()[0]}
+        # group the aggregates by the list unnesting their path goes through
+        by_source = {}
+        for p, kind in aggs:
+            st = steps(p)
+            cut = max([i for i, t in enumerate(st) if t == "[]"], default=-1)
+            by_source.setdefault(tuple(st[:cut + 1]), []).append((p, kind, st[cut + 1:]))
+        for prefix, items in by_source.items():
+            frm, expr, depth = src, None, 0
+            for t in prefix:
+                if t == "[]":
+                    depth += 1
+                    frm = f"(SELECT unnest({expr}) AS u{depth} FROM {frm})"
+                    expr = f"u{depth}"
+                else:
+                    expr = f'"{t}"' if expr is None else f"struct_extract({expr}, '{t}')"
+            exprs = []
+            for p, kind, rest in items:
+                e = expr
+                for t in rest:
+                    e = f'"{t}"' if e is None else f"struct_extract({e}, '{t}')"
+                exprs.append(AGG_SQL[kind].format(e))
+            row = con.sql(f"SELECT {', '.join(exprs)} FROM {frm}").fetchone()
+            for (p, kind, _), v in zip(items, row):
+                vals[p + "|" + kind] = float(v) if isinstance(v, float) else int(v or 0)
+        truth[key] = vals
         with open(cache, "w") as fh:
             json.dump(truth, fh)
     return truth[key]
@@ -241,30 +287,39 @@ def check(result, data):
     """Return {operation name: reason} for every wrong output."""
     con = duck(data)
     bad = {}
-    fp_path = os.path.join(data, "fingerprints.json")
+    fp_path = os.path.join(data, CHECKS, "fingerprints.json")
     fps = json.load(open(fp_path)) if os.path.exists(fp_path) else {}
+    row_ops = {o["name"]: o for o in result["row_ops"]}
+    truths = {}
     for name, c in result["checks"].items():
         if "error" in c:
             bad[name] = "check execution threw: " + c["error"]
-            continue
-        if "oracle" in c:
+        elif "oracle" in c:
             why = oracle_mismatch(con, data, name, c["oracle"], c["out"])
             if why:
                 bad[name] = "oracle: " + why
-        elif fps.setdefault(name, c["fingerprint"]) != c["fingerprint"]:
-            bad[name] = f"fingerprint {c['fingerprint']} differs from an earlier pass's {fps[name]}"
+        elif "fingerprints" in c:
+            first, second = c["fingerprints"]
+            if first != second:
+                bad[name] = f"fingerprints of two executions differ: {first} vs {second}"
+            elif fps.setdefault(name, first) != first:
+                bad[name] = f"fingerprint {first} differs from an earlier run's {fps[name]}"
+        else:
+            op = row_ops[name]
+            want = truths[name] = row_truth(con, data, name, op["path"], op["cols"],
+                                            [(p, k) for p, k, _ in c["aggs"]])
+            got = {"rows": c["rows"], **{p + "|" + k: v for p, k, v in c["aggs"]}}
+            for k, w in want.items():
+                g = got.get(k)
+                if g is None or abs(g - w) > 1e-9 * max(1.0, abs(w)):
+                    bad[name] = f"{k}: read {g}, DuckDB {w}"
+                    break
+    os.makedirs(os.path.dirname(fp_path), exist_ok=True)
     with open(fp_path, "w") as fh:
         json.dump(fps, fh, indent=0, sort_keys=True)
-    row_ops = {o["name"]: o for o in result["row_ops"]}
     for r in result["ops"]:
-        if r["error"] is None and r["op"] in row_ops:
-            op = dict(row_ops[r["op"]], kinds=[(c, k) for c, k, _ in r["aggs"]])
-            want = row_truth(con, data, op)
-            got = [r["rows"]] + [v for _, _, v in r["aggs"]]
-            for w, g, col in zip(want, got, ["rows"] + [c for c, _, _ in r["aggs"]]):
-                if abs(g - w) > 1e-9 * max(1.0, abs(w)):
-                    bad[r["op"]] = f"{col}: read {g}, DuckDB {w}"
-                    break
+        if r["error"] is None and r["op"] in truths and r["rows"] != truths[r["op"]]["rows"]:
+            bad.setdefault(r["op"], f"pass {r['pass']} read {r['rows']} rows, DuckDB {truths[r['op']]['rows']}")
     for e in result["plan_errors"]:
         bad.setdefault("plancheck", e)
     return bad
@@ -276,7 +331,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", choices=["rowread", "adhoc"])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=15)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--selftest", action="store_true")
     a = ap.parse_args()
@@ -330,7 +385,7 @@ def main():
     log(f"{attempted} operations, {failed} failed; cold n={m['n.cold_ops']}, "
         f"warm n={m['n.warm_ops']} over {m['n.warm_passes']:.0f} passes; "
         f"passes {', '.join(f'{x:.2f}' for x in result['passes'])} s; "
-        f"setups {', '.join(f'{x:.2f}' for x in result['setups_s'])} s; "
+        f"set-up {result['setup_s']:.2f} s; "
         f"compiles per pass {result['compiles']}; retained heap MB {result['heap_mb']}")
     if a.trace:
         names = [k for k in m if "." in k and not k.startswith("n.")]

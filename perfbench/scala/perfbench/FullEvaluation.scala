@@ -1,62 +1,47 @@
 package perfbench
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Final}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Sort}
-import org.apache.spark.sql.execution.{QueryExecution, SortExec}
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Pins that the benchmark's timed action evaluates the whole result: for
-  * each named query, the plan Spark actually executes for the `noop` write
-  * keeps the query's final global sort, every output column, and every
-  * aggregate function of the query's own optimized plan. `count()` fails
-  * this (it drops the sort and the aggregates nobody reads), which is why
-  * the benchmark does not time it. Returns one message per violation. */
+/** Pins that the benchmark's timed action ([[Harness.evaluate]]) evaluates
+  * the whole result. For each named query, every plan the timed runs
+  * actually executed (as recorded by the [[Recorder]]'s
+  * QueryExecutionListener inside the operation's action window) must keep
+  * the query's final global sort, every output column, and every aggregate
+  * function of the query's own optimized plan. `count()` fails this (it
+  * drops the sort and the aggregates nobody reads), which is why the
+  * benchmark does not time it. Returns one message per violation. */
 object FullEvaluation {
 
-  def check(spark: SparkSession, dataDir: String, ids: Seq[String]): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try ids.flatMap { id =>
+  def check(spark: SparkSession, dataDir: String, ids: Seq[String], recs: Seq[OpRec],
+      plans: Seq[PlanRec]): Seq[String] =
+    ids.flatMap { id =>
       val q = SparkEntry.engineQueries.find(_.name.startsWith(id + "_"))
         .getOrElse(sys.error(s"no query $id"))
+      // the query as its caller sees it, built again after the timed region
       val df = q.run(spark, dataDir)
       val own = df.queryExecution.optimizedPlan
-      seen.clear()
-      df.write.format("noop").mode("overwrite").save()
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-      seen.asScala.lastOption match {
-        case None => Seq(s"${q.name}: no executed plan observed for the timed write")
-        case Some(qe) =>
-          val nodes = Recorder.nodes(qe.executedPlan)
-          val written = qe.optimizedPlan.children.headOption.map(_.output.map(_.name))
-          val errs = Seq.newBuilder[String]
-          if (!written.contains(df.columns.toSeq))
-            errs += s"${q.name}: timed write outputs ${written.getOrElse(Nil)}, query has ${df.columns.toSeq}"
-          if (own.isInstanceOf[Sort] && own.asInstanceOf[Sort].global &&
-              !nodes.exists { case s: SortExec => s.global; case _ => false })
-            errs += s"${q.name}: timed plan lost the final global sort"
-          val wanted = own.collect { case a: Aggregate => a.aggregateExpressions }.flatten
-            .flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction.prettyName })
-          val got = nodes.collect { case a: BaseAggregateExec => a.aggregateExpressions }.flatten
-            .filter(ae => ae.mode == Final || ae.mode == Complete)
-            .map(_.aggregateFunction.prettyName)
-          val missing = wanted.diff(got)
-          if (wanted.isEmpty) errs += s"${q.name}: query has no aggregate to check"
-          if (missing.nonEmpty) errs += s"${q.name}: timed plan lost aggregates ${missing.mkString(", ")}"
-          errs.result()
+      val wanted = own.collect { case a: Aggregate => a.aggregateExpressions }.flatten
+        .flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction.prettyName })
+      val sorted = own match { case s: Sort => s.global; case _ => false }
+      val timed = recs.filter(r => r.op == q.name && r.error.isEmpty)
+      val errs = Seq.newBuilder[String]
+      if (timed.isEmpty) errs += s"${q.name}: no successful timed execution to check"
+      if (wanted.isEmpty) errs += s"${q.name}: query has no aggregate to check"
+      timed.foreach { r =>
+        plans.filter(p => p.endMs >= r.splitMs && p.endMs <= r.endMs).lastOption match {
+          case None => errs += s"${q.name}: no executed plan observed for the timed action (pass ${r.pass})"
+          case Some(p) =>
+            if (p.written != df.columns.toSeq)
+              errs += s"${q.name}: timed ${p.funcName} outputs ${p.written}, query has ${df.columns.toSeq}"
+            if (sorted && !p.globalSort)
+              errs += s"${q.name}: timed plan lost the final global sort"
+            val missing = wanted.diff(p.finalAggs)
+            if (missing.nonEmpty) errs += s"${q.name}: timed plan lost aggregates ${missing.mkString(", ")}"
+        }
       }
-    } finally spark.listenerManager.unregister(listener)
-  }
+      errs.result().distinct
+    }
 }

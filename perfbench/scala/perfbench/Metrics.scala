@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 /** Turns the timed operations and the recorder's counters into the named
   * metrics. End-to-end metrics need no tracing; per-layer metrics are filled
   * only on traced runs and are means per warm pass, except those named
-  * `_cold` (the cold pass alone), `streaming.*` (streams run where a query
-  * first builds its artifact, so these sum the whole timed region) and the
-  * `tables.*`, `cache.*` and `exec.failed_tasks` snapshots. */
+  * `_cold` (the cold pass alone) and the `tables.*`, `cache.*` and
+  * `exec.failed_tasks` snapshots. */
 object Metrics {
 
   def median(xs: Seq[Double]): Double = {
@@ -38,7 +37,7 @@ object Metrics {
   }
 
   def compute(recs: Seq[OpRec], passes: Seq[(Int, Long, Long, Double)], compiles: Seq[Long],
-      gcs: Seq[Long], rec: Recorder, cores: Int, setups: Seq[Double], resolves: Seq[Double],
+      gcs: Seq[Long], rec: Recorder, cores: Int, setupS: Double, resolveS: Double,
       peakHeapMb: Double, cacheBytes: Long, persisted: Int,
       trace: Boolean, spans: ArrayBuffer[Map[String, Any]]): scala.collection.Map[String, Any] = {
     val cold = recs.filter(_.pass == 0)
@@ -51,11 +50,15 @@ object Metrics {
     }
     val nWarm = passes.count(_._1 > 0).toDouble
     val warmWall = passes.filter(_._1 > 0).map(_._4)
-    // median over reads of rows / (getRows call .. last row)
-    def rate(rs: Seq[OpRec]): Double =
-      median(rs.filter(r => r.totalS > r.constructS).map(r => r.rows / (r.totalS - r.constructS)))
+    // rows over read time (getRows call .. last row), summed over the reads:
+    // a projected read lasts a few tenths of a second, too short for the
+    // median of per-read rates to be steady
+    def rate(rs: Seq[OpRec]): Double = {
+      val readS = rs.map(r => r.totalS - r.constructS).sum
+      if (readS > 0) rs.map(_.rows).sum / readS else 0.0
+    }
     val m = scala.collection.mutable.LinkedHashMap[String, Any](
-      "setup_s" -> median(setups),
+      "setup_s" -> setupS,
       "cold_pass_s" -> passes.head._4,
       "warm_pass_s" -> median(warmWall),
       "cold_gmean_s" -> math.exp(primary(cold).map(math.log).sum / primary(cold).size),
@@ -106,7 +109,7 @@ object Metrics {
     val plans = rec.plans.asScala.toSeq.map(p => (passOf(p.startMs), p))
     val warmPlans = plans.filter(_._1 > 0).map(_._2)
     val batches = rec.batches.asScala.toSeq.map(b => (passOf(b.timeMs), b))
-    val timedBatches = batches.filter(_._1 >= 0).map(_._2)
+    val warmBatches = batches.filter(_._1 > 0).map(_._2)
     val allAcc = passes.map(p => rec.acc(p._1))
     val outBytes = allAcc.map(_.outBytes).sum.toDouble
     val inBytes = allAcc.map(_.inBytes).sum.toDouble
@@ -154,13 +157,13 @@ object Metrics {
       "exec.shuffle_write_bytes" -> perWarm(sumWarm(_.shuffleWrite)),
       "exec.shuffle_read_bytes" -> perWarm(sumWarm(_.shuffleRead)),
       "exec.spill_bytes" -> perWarm(sumWarm(_.spill)),
-      "streaming.batches" -> timedBatches.size.toDouble,
-      "streaming.empty_batches" -> timedBatches.count(_.rows == 0).toDouble,
+      "streaming.batches" -> perWarm(warmBatches.size.toDouble),
+      "streaming.empty_batches" -> perWarm(warmBatches.count(_.rows == 0).toDouble),
       "streaming.useful_batch_ratio" ->
-        (if (timedBatches.isEmpty) 0.0 else timedBatches.count(_.rows > 0).toDouble / timedBatches.size),
-      "streaming.input_rows" -> timedBatches.map(_.rows).sum.toDouble,
-      "streaming.batch_s" -> timedBatches.map(_.durationMs).sum / 1e3,
-      "tables.resolve_s" -> median(resolves),
+        (if (warmBatches.isEmpty) 0.0 else warmBatches.count(_.rows > 0).toDouble / warmBatches.size),
+      "streaming.input_rows" -> perWarm(warmBatches.map(_.rows).sum.toDouble),
+      "streaming.batch_s" -> perWarm(warmBatches.map(_.durationMs).sum / 1e3),
+      "tables.resolve_s" -> resolveS,
       "cache.storage_bytes" -> cacheBytes.toDouble,
       "cache.persisted_rdds" -> persisted.toDouble,
       "jvm.gc_s" -> perWarm(gcs.drop(1).sum / 1e3))

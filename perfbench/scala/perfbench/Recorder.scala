@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -39,8 +41,12 @@ final class Acc {
 }
 
 final case class JobSpan(id: Int, tag: Tag, startMs: Long, endMs: Long)
-final case class PlanRec(startMs: Long, analysisMs: Long, optimizationMs: Long,
-    planningMs: Long, nodes: Int, kernels: Int, graftNodes: Int)
+/** One executed query: its planning phases and plan size, and what
+  * [[FullEvaluation]] checks: the columns a write command wrote, whether
+  * the executed plan has a global sort, and its final aggregate functions. */
+final case class PlanRec(startMs: Long, endMs: Long, funcName: String, analysisMs: Long, optimizationMs: Long,
+    planningMs: Long, nodes: Int, kernels: Int, graftNodes: Int,
+    written: Seq[String], globalSort: Boolean, finalAggs: Seq[String])
 final case class BatchRec(timeMs: Long, rows: Long, durationMs: Long)
 
 /** Metrics collected at the engine's layer boundaries through Spark's public
@@ -108,10 +114,16 @@ final class Recorder(spark: SparkSession, trace: Boolean) {
       val start = ph.get("analysis").orElse(ph.values.headOption).map(_.startTimeMs).getOrElse(0L)
       val nodes = Recorder.nodes(qe.executedPlan)
       val exprs = nodes.flatMap(_.expressions.flatMap(_.collect { case e => e }))
-      plans.add(PlanRec(start, ms("analysis"), ms("optimization"), ms("planning"),
+      val end = (start +: ph.values.map(_.endTimeMs).toSeq).max
+      plans.add(PlanRec(start, end, funcName, ms("analysis"), ms("optimization"), ms("planning"),
         nodes.size,
         exprs.count(_.getClass.getName.startsWith("graft.functions.")),
-        nodes.count(_.getClass.getName.startsWith("graft.plans."))))
+        nodes.count(_.getClass.getName.startsWith("graft.plans.")),
+        qe.optimizedPlan.children.headOption.map(_.output.map(_.name)).getOrElse(Nil),
+        nodes.exists { case s: SortExec => s.global; case _ => false },
+        nodes.collect { case a: BaseAggregateExec => a.aggregateExpressions }.flatten
+          .filter(ae => ae.mode == Final || ae.mode == Complete)
+          .map(_.aggregateFunction.prettyName)))
     }
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
   }
