@@ -26,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * across engines, sessions and partitionings.
   *
   * Codegen: the stage stays whole-stage-generated; the generated code calls
-  * [[chunk]] directly (one virtual call per row — the per-byte loop is flat
-  * JVM code, which is where the time goes).
+  * the static [[CdcChunks.kernel]] (one call per row — the per-byte loop is
+  * flat JVM code, which is where the time goes).
   */
 case class CdcChunks(child: Expression, minLen: Int, maskBits: Int, maxLen: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -43,35 +43,11 @@ case class CdcChunks(child: Expression, minLen: Int, maskBits: Int, maxLen: Int)
 
   private val mask: Long = (1L << maskBits) - 1
 
-  def chunk(s: UTF8String): ArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    var start = 0
-    var h = 0L
-    var i = 0
-    while (i < n) {
-      h = (h << 1) + CdcChunks.Gear(bytes(i) & 0xFF)
-      val len = i - start + 1
-      if ((len >= minLen && (h & mask) == 0L) || len >= maxLen) {
-        out += InternalRow(CdcChunks.fnv1a(bytes, start, i + 1), len)
-        start = i + 1
-        h = 0L
-      }
-      i += 1
-    }
-    if (start < n)
-      out += InternalRow(CdcChunks.fnv1a(bytes, start, n), n - start)
-    new GenericArrayData(out.toArray[Any])
-  }
+  override def nullSafeEval(a: Any): Any =
+    CdcChunks.kernel(a.asInstanceOf[UTF8String], minLen, mask, maxLen)
 
-  override def nullSafeEval(a: Any): Any = chunk(a.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("cdc", this, classOf[CdcChunks].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.chunk($c);")
-  }
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.CdcChunks.kernel($c, $minLen, ${mask}L, $maxLen)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -100,6 +76,29 @@ object CdcChunks {
       i += 1
     }
     h
+  }
+
+  /** The kernel both evaluation paths call. */
+  def kernel(s: UTF8String, minLen: Int, mask: Long, maxLen: Int): ArrayData = {
+    val bytes = s.getBytes
+    val n = bytes.length
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var start = 0
+    var h = 0L
+    var i = 0
+    while (i < n) {
+      h = (h << 1) + Gear(bytes(i) & 0xFF)
+      val len = i - start + 1
+      if ((len >= minLen && (h & mask) == 0L) || len >= maxLen) {
+        out += InternalRow(fnv1a(bytes, start, i + 1), len)
+        start = i + 1
+        h = 0L
+      }
+      i += 1
+    }
+    if (start < n)
+      out += InternalRow(fnv1a(bytes, start, n), n - start)
+    new GenericArrayData(out.toArray[Any])
   }
 
   /** Column-API entry point. */

@@ -103,14 +103,13 @@ case class GreedyBpeTokens(child: Expression, vocab: Seq[String] = GreedyBpe.Voc
   override def nullSafeEval(v: Any): Any =
     GreedyBpe.tokenizeWords(v.asInstanceOf[ArrayData], vocabSet, maxLen)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      // vocab is a broadcast-sized constant: serialized once into the
-      // generated class's references, shared by every row of the task
-      val vocabRef = ctx.addReferenceObj("bpeVocab", vocabSet,
-        "scala.collection.immutable.Set")
-      s"""${ev.value} = graft.functions.GreedyBpe.tokenizeWords($a, $vocabRef, $maxLen);"""
-    })
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // vocab is a broadcast-sized constant: serialized once into the
+    // generated class's references, shared by every row of the task
+    val vocabRef = ctx.addReferenceObj("bpeVocab", vocabSet, "scala.collection.immutable.Set")
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.GreedyBpe.tokenizeWords($a, $vocabRef, $maxLen)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

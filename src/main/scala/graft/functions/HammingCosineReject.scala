@@ -63,117 +63,29 @@ case class HammingCosineReject(
   override def nullable: Boolean = true
   override def prettyName: String = "graft_hamming_cosine_reject"
 
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
   override def eval(input: InternalRow): Any = {
-    val a = ids.eval(input)
-    val b = sigs.eval(input)
-    val c = embs.eval(input)
-    val d = qsig.eval(input)
-    val e = qemb.eval(input)
-    val f = idBound.eval(input)
-    if (a == null || b == null || c == null || d == null || e == null || f == null)
-      return null
-    val idsA = a.asInstanceOf[ArrayData]
-    val sigsA = b.asInstanceOf[ArrayData]
-    val embsA = c.asInstanceOf[ArrayData]
-    val qsigA = d.asInstanceOf[ArrayData]
-    val qembA = e.asInstanceOf[ArrayData]
-    val bound = f.asInstanceOf[Long]
-    val n = math.min(idsA.numElements(),
-      math.min(sigsA.numElements() / words, embsA.numElements() / dim))
-    val qw = new Array[Long](words)
-    var w = 0
-    while (w < words) { qw(w) = qsigA.getLong(w); w += 1 }
-    val qd = new Array[Double](dim)
-    val qn = math.min(qembA.numElements(), dim)
-    var i = 0
-    while (i < qn) { qd(i) = qembA.getFloat(i).toDouble; i += 1 }
-    var eIdx = 0
-    while (eIdx < n && idsA.getLong(eIdx) < bound) {
-      var h = 0; var k = 0; val soff = eIdx * words
-      while (k < words) {
-        h += java.lang.Long.bitCount(sigsA.getLong(soff + k) ^ qw(k)); k += 1
-      }
-      if (h <= slack) {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0
-        var j = 0; val eoff = eIdx * dim
-        while (j < qn) {
-          val xv = qd(j)
-          val yv = embsA.getFloat(eoff + j).toDouble
-          dot += xv * yv; nx += xv * xv; ny += yv * yv
-          j += 1
-        }
-        val raw = dot / (math.sqrt(nx) * math.sqrt(ny))
-        if (raw >= threshold - 1e-4 && round4(raw) >= threshold) return true
-      }
-      eIdx += 1
+    val v = children.map(_.eval(input))
+    if (v.contains(null)) null
+    else {
+      def arr(i: Int) = v(i).asInstanceOf[ArrayData]
+      HammingCosineReject.kernel(arr(0), arr(1), arr(2), arr(3), arr(4),
+        v(5).asInstanceOf[Long], words, slack, dim, threshold)
     }
-    false
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val gens = children.map(_.genCode(ctx))
-    val Seq(idsG, sigsG, embsG, qsigG, qembG, boundG) = gens
-    val n = ctx.freshName("n"); val qw = ctx.freshName("qw")
-    val qd = ctx.freshName("qd"); val qn = ctx.freshName("qn")
-    val k = ctx.freshName("k"); val eIdx = ctx.freshName("e")
-    val h = ctx.freshName("h"); val soff = ctx.freshName("soff")
-    val eoff = ctx.freshName("eoff"); val j = ctx.freshName("j")
-    val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-    val ny = ctx.freshName("ny"); val raw = ctx.freshName("raw")
-    val hit = ctx.freshName("hit")
-    val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-    val thr = threshold
+    val anyNull = gens.map(_.isNull).mkString(" || ")
+    val args = gens.map(_.value).mkString(", ")
     ev.copy(code =
       code"""
-        ${idsG.code}
-        ${sigsG.code}
-        ${embsG.code}
-        ${qsigG.code}
-        ${qembG.code}
-        ${boundG.code}
+        ${blocksToBlock(gens.map(_.code))}
         boolean ${ev.isNull} = true;
         boolean ${ev.value} = false;
-        if (!${idsG.isNull} && !${sigsG.isNull} && !${embsG.isNull} &&
-            !${qsigG.isNull} && !${qembG.isNull} && !${boundG.isNull}) {
+        if (!($anyNull)) {
           ${ev.isNull} = false;
-          int $n = java.lang.Math.min(${idsG.value}.numElements(),
-            java.lang.Math.min(${sigsG.value}.numElements() / $words,
-              ${embsG.value}.numElements() / $dim));
-          long[] $qw = new long[$words];
-          for (int $k = 0; $k < $words; $k++) $qw[$k] = ${qsigG.value}.getLong($k);
-          int $qn = java.lang.Math.min(${qembG.value}.numElements(), $dim);
-          double[] $qd = new double[$dim];
-          for (int $k = 0; $k < $qn; $k++) $qd[$k] = (double) ${qembG.value}.getFloat($k);
-          boolean $hit = false;
-          for (int $eIdx = 0;
-               !$hit && $eIdx < $n && ${idsG.value}.getLong($eIdx) < ${boundG.value};
-               $eIdx++) {
-            int $h = 0; int $soff = $eIdx * $words;
-            for (int $k = 0; $k < $words; $k++) {
-              $h += java.lang.Long.bitCount(${sigsG.value}.getLong($soff + $k) ^ $qw[$k]);
-            }
-            if ($h <= $slack) {
-              double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-              int $eoff = $eIdx * $dim;
-              for (int $j = 0; $j < $qn; $j++) {
-                double $xv = $qd[$j];
-                double $yv = (double) ${embsG.value}.getFloat($eoff + $j);
-                $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-              }
-              double $raw = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-              if ($raw >= $thr - 1e-4 &&
-                  java.math.BigDecimal.valueOf($raw)
-                    .setScale(4, java.math.RoundingMode.HALF_UP)
-                    .doubleValue() >= $thr) {
-                $hit = true;
-              }
-            }
-          }
-          ${ev.value} = $hit;
+          ${ev.value} = graft.functions.HammingCosineReject.kernel(
+            $args, $words, $slack, $dim, ${threshold}D);
         }
       """)
   }
@@ -185,6 +97,33 @@ case class HammingCosineReject(
 }
 
 object HammingCosineReject {
+  import HammingCosineTop1.{cosine, hamming, round4}
+
+  /** The kernel both evaluation paths call: scans entries with id < `bound`
+    * and stops at the first verified hit. */
+  def kernel(ids: ArrayData, sigs: ArrayData, embs: ArrayData, qsig: ArrayData,
+      qemb: ArrayData, bound: Long, words: Int, slack: Int, dim: Int,
+      threshold: Double): Boolean = {
+    val n = math.min(ids.numElements(),
+      math.min(sigs.numElements() / words, embs.numElements() / dim))
+    val qw = new Array[Long](words)
+    var w = 0
+    while (w < words) { qw(w) = qsig.getLong(w); w += 1 }
+    val qd = new Array[Double](dim)
+    val qn = math.min(qemb.numElements(), dim)
+    var i = 0
+    while (i < qn) { qd(i) = qemb.getFloat(i).toDouble; i += 1 }
+    var eIdx = 0
+    while (eIdx < n && ids.getLong(eIdx) < bound) {
+      if (hamming(sigs, eIdx, qw, words) <= slack) {
+        val raw = cosine(embs, eIdx, dim, qd, qn)
+        if (raw >= threshold - 1e-4 && round4(raw) >= threshold) return true
+      }
+      eIdx += 1
+    }
+    false
+  }
+
   /** Column-API entry point. */
   def apply(ids: Column, sigs: Column, embs: Column, qsig: Column,
       qemb: Column, idBound: Column,

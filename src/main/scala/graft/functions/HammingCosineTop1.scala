@@ -56,126 +56,24 @@ case class HammingCosineTop1(
   override def nullable: Boolean = true
   override def prettyName: String = "graft_hamming_cosine_top1"
 
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
   override def eval(input: InternalRow): Any = {
-    val a = ids.eval(input)
-    val b = sigs.eval(input)
-    val c = embs.eval(input)
-    val d = qsig.eval(input)
-    val e = qemb.eval(input)
-    if (a == null || b == null || c == null || d == null || e == null) return null
-    val idsA = a.asInstanceOf[ArrayData]
-    val sigsA = b.asInstanceOf[ArrayData]
-    val embsA = c.asInstanceOf[ArrayData]
-    val qsigA = d.asInstanceOf[ArrayData]
-    val qembA = e.asInstanceOf[ArrayData]
-    val n = math.min(idsA.numElements(),
-      math.min(sigsA.numElements() / words, embsA.numElements() / dim))
-    val qw = new Array[Long](words)
-    var w = 0
-    while (w < words) { qw(w) = qsigA.getLong(w); w += 1 }
-    val qd = new Array[Double](dim)
-    val qn = math.min(qembA.numElements(), dim)
-    var i = 0
-    while (i < qn) { qd(i) = qembA.getFloat(i).toDouble; i += 1 }
-    var found = false
-    var bestId = 0L
-    var bestCos = Double.NegativeInfinity
-    var eIdx = 0
-    while (eIdx < n) {
-      var h = 0; var k = 0; val soff = eIdx * words
-      while (k < words) {
-        h += java.lang.Long.bitCount(sigsA.getLong(soff + k) ^ qw(k)); k += 1
-      }
-      if (h <= slack) {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0
-        var j = 0; val eoff = eIdx * dim
-        while (j < qn) {
-          val xv = qd(j)
-          val yv = embsA.getFloat(eoff + j).toDouble
-          dot += xv * yv; nx += xv * xv; ny += yv * yv
-          j += 1
-        }
-        val raw = dot / (math.sqrt(nx) * math.sqrt(ny))
-        if (!found || raw > bestCos - 1e-4) {
-          val r = round4(raw)
-          if (!found || r > bestCos) {
-            found = true; bestCos = r; bestId = idsA.getLong(eIdx)
-          }
-        }
-      }
-      eIdx += 1
-    }
-    if (!found) null
-    else new GenericInternalRow(Array[Any](bestId, bestCos))
+    val v = children.map(_.eval(input).asInstanceOf[ArrayData])
+    if (v.contains(null)) null
+    else HammingCosineTop1.kernel(v(0), v(1), v(2), v(3), v(4), words, slack, dim)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val gens = children.map(_.genCode(ctx))
-    val Seq(idsG, sigsG, embsG, qsigG, qembG) = gens
-    val n = ctx.freshName("n"); val qw = ctx.freshName("qw")
-    val qd = ctx.freshName("qd"); val qn = ctx.freshName("qn")
-    val k = ctx.freshName("k"); val eIdx = ctx.freshName("e")
-    val h = ctx.freshName("h"); val soff = ctx.freshName("soff")
-    val eoff = ctx.freshName("eoff"); val j = ctx.freshName("j")
-    val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-    val ny = ctx.freshName("ny"); val raw = ctx.freshName("raw")
-    val r = ctx.freshName("r"); val found = ctx.freshName("found")
-    val bestId = ctx.freshName("bestId"); val bestCos = ctx.freshName("bestCos")
-    val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-    val rowCls = classOf[GenericInternalRow].getName
+    val anyNull = gens.map(_.isNull).mkString(" || ")
+    val args = gens.map(_.value).mkString(", ")
     ev.copy(code =
       code"""
-        ${idsG.code}
-        ${sigsG.code}
-        ${embsG.code}
-        ${qsigG.code}
-        ${qembG.code}
+        ${blocksToBlock(gens.map(_.code))}
         boolean ${ev.isNull} = true;
         InternalRow ${ev.value} = null;
-        if (!${idsG.isNull} && !${sigsG.isNull} && !${embsG.isNull} &&
-            !${qsigG.isNull} && !${qembG.isNull}) {
-          int $n = java.lang.Math.min(${idsG.value}.numElements(),
-            java.lang.Math.min(${sigsG.value}.numElements() / $words,
-              ${embsG.value}.numElements() / $dim));
-          long[] $qw = new long[$words];
-          for (int $k = 0; $k < $words; $k++) $qw[$k] = ${qsigG.value}.getLong($k);
-          int $qn = java.lang.Math.min(${qembG.value}.numElements(), $dim);
-          double[] $qd = new double[$dim];
-          for (int $k = 0; $k < $qn; $k++) $qd[$k] = (double) ${qembG.value}.getFloat($k);
-          boolean $found = false;
-          long $bestId = 0L;
-          double $bestCos = java.lang.Double.NEGATIVE_INFINITY;
-          for (int $eIdx = 0; $eIdx < $n; $eIdx++) {
-            int $h = 0; int $soff = $eIdx * $words;
-            for (int $k = 0; $k < $words; $k++) {
-              $h += java.lang.Long.bitCount(${sigsG.value}.getLong($soff + $k) ^ $qw[$k]);
-            }
-            if ($h <= $slack) {
-              double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-              int $eoff = $eIdx * $dim;
-              for (int $j = 0; $j < $qn; $j++) {
-                double $xv = $qd[$j];
-                double $yv = (double) ${embsG.value}.getFloat($eoff + $j);
-                $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-              }
-              double $raw = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-              if (!$found || $raw > $bestCos - 1e-4) {
-                double $r = java.math.BigDecimal.valueOf($raw)
-                  .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue();
-                if (!$found || $r > $bestCos) {
-                  $found = true; $bestCos = $r; $bestId = ${idsG.value}.getLong($eIdx);
-                }
-              }
-            }
-          }
-          if ($found) {
-            ${ev.isNull} = false;
-            ${ev.value} = new $rowCls(new Object[]{$bestId, $bestCos});
-          }
+        if (!($anyNull)) {
+          ${ev.value} = graft.functions.HammingCosineTop1.kernel($args, $words, $slack, $dim);
+          ${ev.isNull} = ${ev.value} == null;
         }
       """)
   }
@@ -187,6 +85,65 @@ case class HammingCosineTop1(
 }
 
 object HammingCosineTop1 {
+  /** The kernel both evaluation paths call; null when no entry is admitted. */
+  def kernel(ids: ArrayData, sigs: ArrayData, embs: ArrayData, qsig: ArrayData,
+      qemb: ArrayData, words: Int, slack: Int, dim: Int): InternalRow = {
+    val n = math.min(ids.numElements(),
+      math.min(sigs.numElements() / words, embs.numElements() / dim))
+    val qw = new Array[Long](words)
+    var w = 0
+    while (w < words) { qw(w) = qsig.getLong(w); w += 1 }
+    val qd = new Array[Double](dim)
+    val qn = math.min(qemb.numElements(), dim)
+    var i = 0
+    while (i < qn) { qd(i) = qemb.getFloat(i).toDouble; i += 1 }
+    var found = false
+    var bestId = 0L
+    var bestCos = Double.NegativeInfinity
+    var eIdx = 0
+    while (eIdx < n) {
+      if (hamming(sigs, eIdx, qw, words) <= slack) {
+        val raw = cosine(embs, eIdx, dim, qd, qn)
+        if (!found || raw > bestCos - 1e-4) {
+          val r = round4(raw)
+          if (!found || r > bestCos) {
+            found = true; bestCos = r; bestId = ids.getLong(eIdx)
+          }
+        }
+      }
+      eIdx += 1
+    }
+    if (!found) null
+    else new GenericInternalRow(Array[Any](bestId, bestCos))
+  }
+
+  /** Bits that differ between entry `e`'s `words`-long signature and `qw`. */
+  private[functions] def hamming(sigs: ArrayData, e: Int, qw: Array[Long], words: Int): Int = {
+    var h = 0; var k = 0; val off = e * words
+    while (k < words) { h += java.lang.Long.bitCount(sigs.getLong(off + k) ^ qw(k)); k += 1 }
+    h
+  }
+
+  /** Cosine between entry `e`'s embedding and the query `qd` over its first
+    * `qn` dims, accumulated and combined exactly as [[CosineSimilarity]]. */
+  private[functions] def cosine(embs: ArrayData, e: Int, dim: Int,
+      qd: Array[Double], qn: Int): Double = {
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var j = 0; val off = e * dim
+    while (j < qn) {
+      val xv = qd(j)
+      val yv = embs.getFloat(off + j).toDouble
+      dot += xv * yv; nx += xv * xv; ny += yv * yv
+      j += 1
+    }
+    dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
+
+  /** Spark's round(x, 4) on doubles. */
+  private[functions] def round4(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+
   /** Column-API entry point. */
   def apply(ids: Column, sigs: Column, embs: Column, qsig: Column,
       qemb: Column, words: Int, slack: Int, dim: Int): Column =

@@ -22,8 +22,7 @@ case class HyperplaneSignature(child: Expression, planes: IndexedSeq[Double], di
     extends UnaryExpression with ExpectsInputTypes {
 
   require(planes.length % dim == 0, "planes must be nPlanes x dim, row-major")
-  private def nPlanes: Int = planes.length / dim
-  require(nPlanes <= 64, "signature is packed into one long")
+  require(planes.length / dim <= 64, "signature is packed into one long")
 
   override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = LongType
@@ -31,39 +30,12 @@ case class HyperplaneSignature(child: Expression, planes: IndexedSeq[Double], di
 
   @transient private lazy val flat: Array[Double] = planes.toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), dim)
-    var sig = 0L
-    var p = 0
-    while (p < nPlanes) {
-      var dot = 0.0; var i = 0; val off = p * dim
-      while (i < n) { dot += x.getFloat(i).toDouble * flat(off + i); i += 1 }
-      if (dot > 0) sig |= (1L << p)
-      p += 1
-    }
-    sig
-  }
+  override def nullSafeEval(a: Any): Any =
+    HyperplaneSignature.kernel(a.asInstanceOf[ArrayData], flat, dim)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("planes", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val p = ctx.freshName("p")
-      val i = ctx.freshName("i"); val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot"); val sig = ctx.freshName("sig")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |long $sig = 0L;
-         |for (int $p = 0; $p < $nPlanes; $p++) {
-         |  double $dot = 0.0; int $off = $p * $dim;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $dot += ((double) $a.getFloat($i)) * $planesRef[$off + $i];
-         |  }
-         |  if ($dot > 0) $sig |= (1L << $p);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.HyperplaneSignature.kernel($a, $planesRef, $dim)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -71,6 +43,21 @@ case class HyperplaneSignature(child: Expression, planes: IndexedSeq[Double], di
 }
 
 object HyperplaneSignature {
+  /** The kernel both evaluation paths call; `planes` is nPlanes × dim. */
+  def kernel(x: ArrayData, planes: Array[Double], dim: Int): Long = {
+    val n = math.min(x.numElements(), dim)
+    val nPlanes = planes.length / dim
+    var sig = 0L
+    var p = 0
+    while (p < nPlanes) {
+      var dot = 0.0; var i = 0; val off = p * dim
+      while (i < n) { dot += x.getFloat(i).toDouble * planes(off + i); i += 1 }
+      if (dot > 0) sig |= (1L << p)
+      p += 1
+    }
+    sig
+  }
+
   /** Column-API entry point. */
   def apply(emb: Column, planes: IndexedSeq[Double], dim: Int): Column =
     GraftShims.column(HyperplaneSignature(GraftShims.expression(emb), planes, dim))

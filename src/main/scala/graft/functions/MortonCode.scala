@@ -29,22 +29,7 @@ case class MortonCode(left: Expression, right: Expression)
     MortonCode.interleave(a.asInstanceOf[Long], b.asInstanceOf[Long])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      def spread(v: String): String =
-        s"""$v &= 0xFFFFFFFFL;
-           |$v = ($v | ($v << 16)) & 0x0000FFFF0000FFFFL;
-           |$v = ($v | ($v << 8))  & 0x00FF00FF00FF00FFL;
-           |$v = ($v | ($v << 4))  & 0x0F0F0F0F0F0F0F0FL;
-           |$v = ($v | ($v << 2))  & 0x3333333333333333L;
-           |$v = ($v | ($v << 1))  & 0x5555555555555555L;""".stripMargin
-      s"""
-         |long $x = $a; long $y = $b;
-         |${spread(x)}
-         |${spread(y)}
-         |${ev.value} = $x | ($y << 1);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MortonCode.interleave($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -63,7 +48,8 @@ object MortonCode {
     v
   }
 
-  /** Interleave the low 32 bits: bit i of `a` → bit 2i, bit i of `b` → 2i+1. */
+  /** The kernel both evaluation paths call: interleave the low 32 bits,
+    * bit i of `a` → bit 2i, bit i of `b` → 2i+1. */
   def interleave(a: Long, b: Long): Long = spread(a) | (spread(b) << 1)
 
   /** Column-API entry point. */

@@ -25,7 +25,6 @@ case class NearestCentroid(child: Expression, cents: IndexedSeq[Double], dim: In
 
   require(dim > 0 && cents.nonEmpty && cents.length % dim == 0,
     "cents must be k x dim, row-major")
-  private def k: Int = cents.length / dim
 
   override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = IntegerType
@@ -33,45 +32,12 @@ case class NearestCentroid(child: Expression, cents: IndexedSeq[Double], dim: In
 
   @transient private lazy val flat: Array[Double] = cents.toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), dim)
-    var best = 0
-    var bd = Double.MaxValue
-    var c = 0
-    while (c < k) {
-      var d = 0.0; var i = 0; val off = c * dim
-      while (i < n) {
-        val t = x.getFloat(i).toDouble - flat(off + i); d += t * t; i += 1
-      }
-      if (d < bd) { bd = d; best = c }
-      c += 1
-    }
-    best
-  }
+  override def nullSafeEval(a: Any): Any =
+    NearestCentroid.kernel(a.asInstanceOf[ArrayData], flat, dim)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("cents", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val c = ctx.freshName("c")
-      val i = ctx.freshName("i"); val off = ctx.freshName("off")
-      val d = ctx.freshName("d"); val tt = ctx.freshName("t")
-      val best = ctx.freshName("best"); val bd = ctx.freshName("bd")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |int $best = 0;
-         |double $bd = java.lang.Double.MAX_VALUE;
-         |for (int $c = 0; $c < $k; $c++) {
-         |  double $d = 0.0; int $off = $c * $dim;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $tt = ((double) $a.getFloat($i)) - $centsRef[$off + $i];
-         |    $d += $tt * $tt;
-         |  }
-         |  if ($d < $bd) { $bd = $d; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.NearestCentroid.kernel($a, $centsRef, $dim)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -79,6 +45,24 @@ case class NearestCentroid(child: Expression, cents: IndexedSeq[Double], dim: In
 }
 
 object NearestCentroid {
+  /** The kernel both evaluation paths call; `cents` is k × dim. */
+  def kernel(x: ArrayData, cents: Array[Double], dim: Int): Int = {
+    val n = math.min(x.numElements(), dim)
+    val k = cents.length / dim
+    var best = 0
+    var bd = Double.MaxValue
+    var c = 0
+    while (c < k) {
+      var d = 0.0; var i = 0; val off = c * dim
+      while (i < n) {
+        val t = x.getFloat(i).toDouble - cents(off + i); d += t * t; i += 1
+      }
+      if (d < bd) { bd = d; best = c }
+      c += 1
+    }
+    best
+  }
+
   /** Column-API entry point: flat row-major centroid matrix. */
   def apply(emb: Column, cents: IndexedSeq[Double], dim: Int): Column =
     GraftShims.column(NearestCentroid(GraftShims.expression(emb), cents, dim))

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** The `nprobe` nearest centroid ids, ascending by (d2, cid), as ONE fused
@@ -29,8 +29,6 @@ case class NearestCentroids(
   require(dim > 0 && cents.nonEmpty && cents.length % dim == 0,
     "cents must be k x dim, row-major")
   require(nprobe > 0, "nprobe must be positive")
-  private def k: Int = cents.length / dim
-  private def p: Int = math.min(k, nprobe)
 
   override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -38,16 +36,32 @@ case class NearestCentroids(
 
   @transient private lazy val flat: Array[Double] = cents.toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    NearestCentroids.kernel(a.asInstanceOf[ArrayData], flat, dim, nprobe)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centsRef = ctx.addReferenceObj("cents", flat, "double[]")
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.NearestCentroids.kernel($a, $centsRef, $dim, $nprobe)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object NearestCentroids {
+  /** The kernel both evaluation paths call; `cents` is k × dim. */
+  def kernel(x: ArrayData, cents: Array[Double], dim: Int, nprobe: Int): ArrayData = {
     val n = math.min(x.numElements(), dim)
+    val k = cents.length / dim
+    val p = math.min(k, nprobe)
     val bd = Array.fill(p)(Double.MaxValue)
     val bi = new Array[Int](p)
     var c = 0
     while (c < k) {
       var d = 0.0; var i = 0; val off = c * dim
       while (i < n) {
-        val t = x.getFloat(i).toDouble - flat(off + i); d += t * t; i += 1
+        val t = x.getFloat(i).toDouble - cents(off + i); d += t * t; i += 1
       }
       if (d < bd(p - 1)) {
         var j = p - 1
@@ -56,46 +70,9 @@ case class NearestCentroids(
       }
       c += 1
     }
-    new GenericArrayData(bi.map(Int.box))
+    UnsafeArrayData.fromPrimitiveArray(bi)
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val c = ctx.freshName("c")
-      val i = ctx.freshName("i"); val off = ctx.freshName("off")
-      val d = ctx.freshName("d"); val tt = ctx.freshName("t")
-      val bd = ctx.freshName("bd"); val bi = ctx.freshName("bi")
-      val j = ctx.freshName("j")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |double[] $bd = new double[$p];
-         |int[] $bi = new int[$p];
-         |java.util.Arrays.fill($bd, java.lang.Double.MAX_VALUE);
-         |for (int $c = 0; $c < $k; $c++) {
-         |  double $d = 0.0; int $off = $c * $dim;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $tt = ((double) $a.getFloat($i)) - $centsRef[$off + $i];
-         |    $d += $tt * $tt;
-         |  }
-         |  if ($d < $bd[$p - 1]) {
-         |    int $j = $p - 1;
-         |    while ($j > 0 && $d < $bd[$j - 1]) {
-         |      $bd[$j] = $bd[$j - 1]; $bi[$j] = $bi[$j - 1]; $j--;
-         |    }
-         |    $bd[$j] = $d; $bi[$j] = $c;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($bi);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object NearestCentroids {
   /** Column-API entry point: flat row-major centroid matrix. */
   def apply(emb: Column, cents: IndexedSeq[Double], dim: Int, nprobe: Int): Column =
     GraftShims.column(NearestCentroids(GraftShims.expression(emb), cents, dim, nprobe))

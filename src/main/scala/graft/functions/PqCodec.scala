@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * q140, q146, q186) — ~0.4 s of construct/optimize latency per run before
   * a row moved. Here the codebook rides the plan as ONE flat reference
   * object (1 KB of doubles, structural equality preserved via the
-  * IndexedSeq constructor arg) and the loops run in generated Java.
+  * IndexedSeq constructor arg) and each loop is one kernel method on the
+  * expression's companion, called by the interpreted and generated paths.
   *
   * Numeric contract — bit-exact with the old expressions, pinned by PqSpec
   * against [[PqIndex.encodeLocal]]:
@@ -55,15 +56,6 @@ private[functions] trait PqBookExpression extends UnaryExpression {
     case other => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects array<float> or array<double>, got $other")
   }
-
-  /** Read element `idx` of the input vector as double (both call sites of
-    * the old subD2 cast to double before the subtraction). */
-  protected def elemAt(x: ArrayData, idx: Int): Double =
-    if (elemIsFloat) x.getFloat(idx).toDouble else x.getDouble(idx)
-
-  /** The generated-Java twin of [[elemAt]]. */
-  protected def genElemAt(a: String, idx: String): String =
-    if (elemIsFloat) s"((double) $a.getFloat($idx))" else s"$a.getDouble($idx)"
 }
 
 /** Map-only PQ encode: array<int> of `m` codeword indices per vector. */
@@ -74,55 +66,13 @@ case class PqEncode(child: Expression, books: IndexedSeq[Double],
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_pq_encode"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val codes = new Array[Int](m)
-    var s = 0
-    while (s < m) {
-      var best = 0
-      var bd = Double.MaxValue
-      var j = 0
-      while (j < k) {
-        var d = 0.0; var i = 0; val off = (s * k + j) * subDim; val xo = s * subDim
-        while (i < subDim) {
-          val t = elemAt(x, xo + i) - flat(off + i); d += t * t; i += 1
-        }
-        if (d < bd) { bd = d; best = j }
-        j += 1
-      }
-      codes(s) = best
-      s += 1
-    }
-    new GenericArrayData(codes.map(Int.box))
-  }
+  override def nullSafeEval(a: Any): Any =
+    PqEncode.kernel(a.asInstanceOf[ArrayData], flat, m, k, subDim, elemIsFloat)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val booksRef = ctx.addReferenceObj("books", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val codes = ctx.freshName("codes"); val s = ctx.freshName("s")
-      val j = ctx.freshName("j"); val i = ctx.freshName("i")
-      val off = ctx.freshName("off"); val xo = ctx.freshName("xo")
-      val d = ctx.freshName("d"); val tt = ctx.freshName("t")
-      val best = ctx.freshName("best"); val bd = ctx.freshName("bd")
-      s"""
-         |int[] $codes = new int[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $best = 0;
-         |  double $bd = java.lang.Double.MAX_VALUE;
-         |  int $xo = $s * $subDim;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    double $d = 0.0; int $off = ($s * $k + $j) * $subDim;
-         |    for (int $i = 0; $i < $subDim; $i++) {
-         |      double $tt = ${genElemAt(a, s"$xo + $i")} - $booksRef[$off + $i];
-         |      $d += $tt * $tt;
-         |    }
-         |    if ($d < $bd) { $bd = $d; $best = $j; }
-         |  }
-         |  $codes[$s] = $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($codes);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.PqEncode.kernel($a, $booksRef, $m, $k, $subDim, $elemIsFloat)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -139,53 +89,13 @@ case class PqLut(child: Expression, books: IndexedSeq[Double],
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def prettyName: String = "graft_pq_lut"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val rows = new Array[Any](m)
-    var s = 0
-    while (s < m) {
-      val row = new Array[Double](k)
-      var j = 0
-      while (j < k) {
-        var d = 0.0; var i = 0; val off = (s * k + j) * subDim; val xo = s * subDim
-        while (i < subDim) {
-          val t = elemAt(x, xo + i) - flat(off + i); d += t * t; i += 1
-        }
-        row(j) = d
-        j += 1
-      }
-      rows(s) = new GenericArrayData(row)
-      s += 1
-    }
-    new GenericArrayData(rows)
-  }
+  override def nullSafeEval(a: Any): Any =
+    PqLut.kernel(a.asInstanceOf[ArrayData], flat, m, k, subDim, elemIsFloat)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val booksRef = ctx.addReferenceObj("books", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val rows = ctx.freshName("rows"); val row = ctx.freshName("row")
-      val s = ctx.freshName("s"); val j = ctx.freshName("j")
-      val i = ctx.freshName("i"); val off = ctx.freshName("off")
-      val xo = ctx.freshName("xo")
-      val d = ctx.freshName("d"); val tt = ctx.freshName("t")
-      s"""
-         |Object[] $rows = new Object[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  double[] $row = new double[$k];
-         |  int $xo = $s * $subDim;
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    double $d = 0.0; int $off = ($s * $k + $j) * $subDim;
-         |    for (int $i = 0; $i < $subDim; $i++) {
-         |      double $tt = ${genElemAt(a, s"$xo + $i")} - $booksRef[$off + $i];
-         |      $d += $tt * $tt;
-         |    }
-         |    $row[$j] = $d;
-         |  }
-         |  $rows[$s] = new org.apache.spark.sql.catalyst.util.GenericArrayData($row);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($rows);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.PqLut.kernel($a, $booksRef, $m, $k, $subDim, $elemIsFloat)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -206,9 +116,65 @@ case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
       s"$prettyName expects (array<array<double>>, array<int>), got ($l, $r)")
   }
 
-  override def nullSafeEval(lutAny: Any, codesAny: Any): Any = {
-    val lut = lutAny.asInstanceOf[ArrayData]
-    val codes = codesAny.asInstanceOf[ArrayData]
+  override def nullSafeEval(lutAny: Any, codesAny: Any): Any =
+    PqAdc.kernel(lutAny.asInstanceOf[ArrayData], codesAny.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (lut, codes) => s"graft.functions.PqAdc.kernel($lut, $codes)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object PqEncode {
+  /** The kernel both evaluation paths call: the argmin codeword per
+    * subspace. `books` is flat (s, j, i)-major. */
+  def kernel(x: ArrayData, books: Array[Double], m: Int, k: Int, subDim: Int,
+      isFloat: Boolean): ArrayData = {
+    val codes = new Array[Int](m)
+    var s = 0
+    while (s < m) {
+      var best = 0
+      var bd = Double.MaxValue
+      var j = 0
+      while (j < k) {
+        val d = PqCodec.subD2(x, isFloat, s * subDim, books, (s * k + j) * subDim, subDim)
+        if (d < bd) { bd = d; best = j }
+        j += 1
+      }
+      codes(s) = best
+      s += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(codes)
+  }
+}
+
+object PqLut {
+  /** The kernel both evaluation paths call: every subspace × codeword d2. */
+  def kernel(x: ArrayData, books: Array[Double], m: Int, k: Int, subDim: Int,
+      isFloat: Boolean): ArrayData = {
+    val rows = new Array[Any](m)
+    var s = 0
+    while (s < m) {
+      val row = new Array[Double](k)
+      var j = 0
+      while (j < k) {
+        row(j) = PqCodec.subD2(x, isFloat, s * subDim, books, (s * k + j) * subDim, subDim)
+        j += 1
+      }
+      rows(s) = new GenericArrayData(row)
+      s += 1
+    }
+    new GenericArrayData(rows)
+  }
+}
+
+object PqAdc {
+  /** The kernel both evaluation paths call. The sum covers only
+    * `min(len(lut), len(codes))` subspaces, where the old `zip_with`
+    * padded the shorter operand with nulls. */
+  def kernel(lut: ArrayData, codes: ArrayData): Double = {
     val n = math.min(lut.numElements(), codes.numElements())
     var sum = 0.0
     var s = 0
@@ -218,28 +184,21 @@ case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
     }
     sum
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (lut, codes) => {
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = java.lang.Math.min($lut.numElements(), $codes.numElements());
-         |double $sum = 0.0;
-         |for (int $s = 0; $s < $n; $s++) {
-         |  $sum += $lut.getArray($s).getDouble($codes.getInt($s));
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object PqCodec {
+  /** Squared L2 between the subvector of `x` at `xo` (elements read as
+    * double) and the codeword of `books` at `off`, in ascending dim order. */
+  private[functions] def subD2(x: ArrayData, isFloat: Boolean, xo: Int,
+      books: Array[Double], off: Int, subDim: Int): Double = {
+    var d = 0.0; var i = 0
+    while (i < subDim) {
+      val t = (if (isFloat) x.getFloat(xo + i).toDouble else x.getDouble(xo + i)) - books(off + i)
+      d += t * t; i += 1
+    }
+    d
+  }
+
   def encode(emb: Column, books: IndexedSeq[Double], m: Int, k: Int, subDim: Int): Column =
     GraftShims.column(PqEncode(GraftShims.expression(emb), books, m, k, subDim))
 

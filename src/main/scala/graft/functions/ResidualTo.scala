@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * (q140/q146/q186), and the k×dim literal centroid table rode each plan
   * as ~20 KB of expression tree. Here the table is ONE flat reference
   * object (IndexedSeq constructor arg keeps structural equality for plan
-  * canonicalization) and the loop runs in generated Java.
+  * canonicalization) and the loop is one compiled kernel that both the
+  * interpreted and the generated path call.
   *
   * Numeric contract — identical to the old expression element-for-element:
   * out(i) = emb(i).toDouble − cents(bucket·dim + i), the exact IEEE ops of
@@ -44,35 +45,14 @@ case class ResidualTo(left: Expression, right: Expression,
       s"$prettyName expects (array<float|double>, int), got ($l, $r)")
   }
 
-  override def nullSafeEval(embAny: Any, bucketAny: Any): Any = {
-    val x = embAny.asInstanceOf[ArrayData]
-    val off = bucketAny.asInstanceOf[Int] * dim
-    val n = math.min(x.numElements(), dim)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      out(i) = (if (elemIsFloat) x.getFloat(i).toDouble else x.getDouble(i)) - flat(off + i)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(embAny: Any, bucketAny: Any): Any =
+    ResidualTo.kernel(embAny.asInstanceOf[ArrayData], bucketAny.asInstanceOf[Int],
+      flat, dim, elemIsFloat)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("cents", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val off = ctx.freshName("off"); val out = ctx.freshName("out")
-      val get = if (elemIsFloat) s"((double) $a.getFloat($i))" else s"$a.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |int $off = $b * $dim;
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = $get - $centsRef[$off + $i];
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.ResidualTo.kernel($a, $b, $centsRef, $dim, $elemIsFloat)")
   }
 
   override protected def withNewChildrenInternal(
@@ -81,6 +61,22 @@ case class ResidualTo(left: Expression, right: Expression,
 }
 
 object ResidualTo {
+  /** The kernel both evaluation paths call; `cents` is k × dim. The result
+    * covers only `min(len(emb), dim)` elements, where the old `zip_with`
+    * padded the shorter operand with nulls. */
+  def kernel(x: ArrayData, bucket: Int, cents: Array[Double], dim: Int,
+      isFloat: Boolean): ArrayData = {
+    val off = bucket * dim
+    val n = math.min(x.numElements(), dim)
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      out(i) = (if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)) - cents(off + i)
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
   /** Column-API entry point: flat row-major centroid matrix. */
   def apply(emb: Column, bucket: Column, cents: IndexedSeq[Double], dim: Int): Column =
     GraftShims.column(ResidualTo(

@@ -32,14 +32,25 @@ object SketchExpressions {
 case class MinHashSignature(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
-  final val NumHashes = 64
-
   override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_sig"
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
+  override def nullSafeEval(v: Any): Any =
+    MinHashSignature.kernel(v.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.MinHashSignature.kernel($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSignature {
+  final val NumHashes = 64
+
+  /** The kernel both evaluation paths call. */
+  def kernel(arr: ArrayData): ArrayData = {
     val mins = Array.fill(NumHashes)(Long.MaxValue)
     var i = 0
     while (i < arr.numElements()) {
@@ -57,35 +68,6 @@ case class MinHashSignature(child: Expression)
     new GenericArrayData(mins)
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val gad = classOf[GenericArrayData].getName
-      val mins = ctx.freshName("mins"); val i = ctx.freshName("i")
-      val k = ctx.freshName("k"); val s = ctx.freshName("s")
-      val h1 = ctx.freshName("h1"); val h2 = ctx.freshName("h2")
-      val g = ctx.freshName("g")
-      s"""
-         |long[] $mins = new long[$NumHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String $s = $a.getUTF8String($i);
-         |  long $h1 = $xxh.hashUnsafeBytes($s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${SketchExpressions.Seed1}L);
-         |  long $h2 = $xxh.hashUnsafeBytes($s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${SketchExpressions.Seed2}L);
-         |  for (int $k = 0; $k < $NumHashes; $k++) {
-         |    long $g = $h1 + (long) $k * $h2;
-         |    if ($g < $mins[$k]) $mins[$k] = $g;
-         |  }
-         |}
-         |${ev.value} = new $gad($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MinHashSignature {
   def apply(arr: Column): Column =
     GraftShims.column(MinHashSignature(GraftShims.expression(arr)))
 }
@@ -99,8 +81,19 @@ case class SimHashSignature(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash_sig"
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
+  override def nullSafeEval(v: Any): Any =
+    SimHashSignature.kernel(v.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.SimHashSignature.kernel($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHashSignature {
+  /** The kernel both evaluation paths call. */
+  def kernel(arr: ArrayData): Long = {
     val votes = new Array[Int](64)
     var i = 0
     while (i < arr.numElements()) {
@@ -114,32 +107,6 @@ case class SimHashSignature(child: Expression)
     sig
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val votes = ctx.freshName("votes"); val i = ctx.freshName("i")
-      val b = ctx.freshName("b"); val s = ctx.freshName("s")
-      val hv = ctx.freshName("hv"); val sig = ctx.freshName("sig")
-      s"""
-         |int[] $votes = new int[64];
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String $s = $a.getUTF8String($i);
-         |  long $hv = $xxh.hashUnsafeBytes($s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${SketchExpressions.Seed1}L);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $votes[$b] += ((($hv >>> $b) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) { if ($votes[$b] > 0) $sig |= (1L << $b); }
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SimHashSignature {
   def apply(arr: Column): Column =
     GraftShims.column(SimHashSignature(GraftShims.expression(arr)))
 }
@@ -160,13 +127,12 @@ case class CmsEstimateCount(sketch: Expression, item: Expression)
   override def prettyName: String = "graft_cms_estimate"
 
   override def nullSafeEval(sk: Any, it: Any): Any =
-    CmsEstimateCount.estimate(
+    CmsEstimateCount.kernel(
       sk.asInstanceOf[Array[Byte]],
       it.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (sk, it) =>
-      s"${ev.value} = graft.functions.CmsEstimateCount.estimate($sk, $it);")
+    defineCodeGen(ctx, ev, (sk, it) => s"graft.functions.CmsEstimateCount.kernel($sk, $it)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(sketch = newLeft, item = newRight)
@@ -185,7 +151,8 @@ object CmsEstimateCount {
   // correct and acceptably cheap.
   @transient @volatile private var cached: (Array[Byte], CountMinSketch) = null
 
-  def estimate(bytes: Array[Byte], item: org.apache.spark.unsafe.types.UTF8String): Long = {
+  /** The kernel both evaluation paths call. */
+  def kernel(bytes: Array[Byte], item: org.apache.spark.unsafe.types.UTF8String): Long = {
     var c = cached
     if (c == null || !java.util.Arrays.equals(c._1, bytes)) {
       c = (bytes.clone(),

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** The `nprobe` nearest FINE cells of a two-level quantizer
@@ -52,7 +52,6 @@ case class TwoLevelNearestCentroids(
     cellStart.head == 0 && cellStart.last == sub.length / dim,
     "cellStart must be k1+1 offsets into sub's rows")
   require(p1 > 0 && nprobe > 0, "p1 and nprobe must be positive")
-  private def k1: Int = l1.length / dim
 
   override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -62,18 +61,39 @@ case class TwoLevelNearestCentroids(
   @transient private lazy val subFlat: Array[Double] = sub.toArray
   @transient private lazy val startFlat: Array[Int] = cellStart.toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    TwoLevelNearestCentroids.kernel(a.asInstanceOf[ArrayData],
+      l1Flat, subFlat, startFlat, k2, dim, p1, nprobe)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val l1Ref = ctx.addReferenceObj("l1", l1Flat, "double[]")
+    val subRef = ctx.addReferenceObj("sub", subFlat, "double[]")
+    val startRef = ctx.addReferenceObj("cellStart", startFlat, "int[]")
+    defineCodeGen(ctx, ev, a => "graft.functions.TwoLevelNearestCentroids.kernel(" +
+      s"$a, $l1Ref, $subRef, $startRef, $k2, $dim, $p1, $nprobe)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object TwoLevelNearestCentroids {
+  /** The kernel both evaluation paths call: `l1` is k1 × dim, `sub` holds
+    * every cell's sub-centroids row-major, and cell c owns rows
+    * [cellStart(c), cellStart(c + 1)). */
+  def kernel(x: ArrayData, l1: Array[Double], sub: Array[Double],
+      cellStart: Array[Int], k2: Int, dim: Int, p1: Int, nprobe: Int): ArrayData = {
+    val k1 = l1.length / dim
     val n = math.min(x.numElements(), dim)
     // Stage 1: top-p1 non-empty L1 cells by (d2, cid) ascending.
     val cd = Array.fill(p1)(Double.MaxValue)
     val ci = Array.fill(p1)(-1)
     var c = 0
     while (c < k1) {
-      if (startFlat(c + 1) > startFlat(c)) {
+      if (cellStart(c + 1) > cellStart(c)) {
         var d = 0.0; var i = 0; val off = c * dim
         while (i < n) {
-          val t = x.getFloat(i).toDouble - l1Flat(off + i); d += t * t; i += 1
+          val t = x.getFloat(i).toDouble - l1(off + i); d += t * t; i += 1
         }
         if (d < cd(p1 - 1)) {
           var j = p1 - 1
@@ -93,11 +113,11 @@ case class TwoLevelNearestCentroids(
       val cc = ci(s)
       if (cc >= 0) {
         var j2 = 0
-        val cnt = startFlat(cc + 1) - startFlat(cc)
+        val cnt = cellStart(cc + 1) - cellStart(cc)
         while (j2 < cnt) {
-          var d = 0.0; var i = 0; val off = (startFlat(cc) + j2) * dim
+          var d = 0.0; var i = 0; val off = (cellStart(cc) + j2) * dim
           while (i < n) {
-            val t = x.getFloat(i).toDouble - subFlat(off + i); d += t * t; i += 1
+            val t = x.getFloat(i).toDouble - sub(off + i); d += t * t; i += 1
           }
           if (d < bd(nprobe - 1)) {
             var j = nprobe - 1
@@ -111,81 +131,9 @@ case class TwoLevelNearestCentroids(
     }
     var m = 0
     while (m < nprobe && bi(m) >= 0) m += 1
-    new GenericArrayData(bi.take(m).map(Int.box))
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(bi, m))
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l1Ref = ctx.addReferenceObj("l1", l1Flat, "double[]")
-    val subRef = ctx.addReferenceObj("sub", subFlat, "double[]")
-    val startRef = ctx.addReferenceObj("cellStart", startFlat, "int[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val c = ctx.freshName("c")
-      val i = ctx.freshName("i"); val off = ctx.freshName("off")
-      val d = ctx.freshName("d"); val tt = ctx.freshName("t")
-      val cd = ctx.freshName("cd"); val ci = ctx.freshName("ci")
-      val bd = ctx.freshName("bd"); val bi = ctx.freshName("bi")
-      val j = ctx.freshName("j"); val s = ctx.freshName("s")
-      val cc = ctx.freshName("cc"); val j2 = ctx.freshName("j2")
-      val cnt = ctx.freshName("cnt"); val m = ctx.freshName("m")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |double[] $cd = new double[$p1];
-         |int[] $ci = new int[$p1];
-         |java.util.Arrays.fill($cd, java.lang.Double.MAX_VALUE);
-         |java.util.Arrays.fill($ci, -1);
-         |for (int $c = 0; $c < $k1; $c++) {
-         |  if ($startRef[$c + 1] > $startRef[$c]) {
-         |    double $d = 0.0; int $off = $c * $dim;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $tt = ((double) $a.getFloat($i)) - $l1Ref[$off + $i];
-         |      $d += $tt * $tt;
-         |    }
-         |    if ($d < $cd[$p1 - 1]) {
-         |      int $j = $p1 - 1;
-         |      while ($j > 0 && $d < $cd[$j - 1]) {
-         |        $cd[$j] = $cd[$j - 1]; $ci[$j] = $ci[$j - 1]; $j--;
-         |      }
-         |      $cd[$j] = $d; $ci[$j] = $c;
-         |    }
-         |  }
-         |}
-         |java.util.Arrays.sort($ci);
-         |double[] $bd = new double[$nprobe];
-         |int[] $bi = new int[$nprobe];
-         |java.util.Arrays.fill($bd, java.lang.Double.MAX_VALUE);
-         |java.util.Arrays.fill($bi, -1);
-         |for (int $s = 0; $s < $p1; $s++) {
-         |  int $cc = $ci[$s];
-         |  if ($cc >= 0) {
-         |    int $cnt = $startRef[$cc + 1] - $startRef[$cc];
-         |    for (int $j2 = 0; $j2 < $cnt; $j2++) {
-         |      double $d = 0.0; int $off = ($startRef[$cc] + $j2) * $dim;
-         |      for (int $i = 0; $i < $n; $i++) {
-         |        double $tt = ((double) $a.getFloat($i)) - $subRef[$off + $i];
-         |        $d += $tt * $tt;
-         |      }
-         |      if ($d < $bd[$nprobe - 1]) {
-         |        int $j = $nprobe - 1;
-         |        while ($j > 0 && $d < $bd[$j - 1]) {
-         |          $bd[$j] = $bd[$j - 1]; $bi[$j] = $bi[$j - 1]; $j--;
-         |        }
-         |        $bd[$j] = $d; $bi[$j] = $cc * $k2 + $j2;
-         |      }
-         |    }
-         |  }
-         |}
-         |int $m = 0;
-         |while ($m < $nprobe && $bi[$m] >= 0) $m++;
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf($bi, $m));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TwoLevelNearestCentroids {
   /** Column-API entry point over a trained two-level model. */
   def apply(emb: Column, m: KMeansTrainer.Trained2, p1: Int, nprobe: Int): Column = {
     val dim = m.l1.centroids.head.length

@@ -213,7 +213,6 @@ object Multimodal {
     val stride = w * channels
     val raw = new Array[Byte]((stride + 1) * h) // +1 filter byte per scanline
     val inf = inflScratch.get()
-    inf.reset()
     if (idatMulti != null) inf.setInput(idatMulti.toByteArray)
     else if (idatOff >= 0) inf.setInput(bytes, idatOff, idatLen)
     else return None
@@ -232,7 +231,7 @@ object Multimodal {
       }
     } catch {
       case _: java.util.zip.DataFormatException => return None
-    }
+    } finally inf.reset() // the pooled Inflater must not pin this record's payload
     if (got != raw.length) return None
     val out = new Array[Byte](stride * h)
     var y = 0

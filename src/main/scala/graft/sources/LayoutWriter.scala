@@ -145,7 +145,10 @@ object LayoutWriter {
     * via spark.graft.audit.buckets — a data-derived number, never the
     * executor count. */
   def auditBuckets(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.audit.buckets").map(_.toInt).getOrElse(8)
+    spark.conf.getOption("spark.graft.audit.buckets").fold(8) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.audit.buckets must be a positive integer, got '$v'"))
+    }
 
   /** Deterministic at-rest table name keyed on (tag, data dir, bucket
     * count): same artifact → same name, so re-runs and fresh sessions

@@ -47,6 +47,16 @@ class CodegenCompileSpec extends AnyFunSuite {
     IndexedSeq(1.0, -1.0, 0.5, 0.0, -0.25, 0.75, -1.5, 2.0)
 
   private def in(i: Int, dt: DataType) = BoundReference(i, dt, nullable = true)
+  private def la(vs: Long*): GenericArrayData = new GenericArrayData(vs.map(v => v: Any).toArray)
+
+  // Bucket of two entries (ids 7, 9; one signature word; dim 4) probed with
+  // threshold 0.9, slack 2.
+  private val hammingReject = HammingCosineReject(
+    in(0, ArrayType(LongType)), in(1, ArrayType(LongType)), in(2, floatArr),
+    in(3, ArrayType(LongType)), in(4, floatArr), in(5, LongType), 1, 2, 4, 0.9)
+  private def hammingRejectRow(idBound: Long) =
+    row(la(7L, 9L), la(4L, -1L), fa(0.5f, -0.25f, 1.5f, 0.75f, 1.0f, 2.0f, -0.5f, 0.25f),
+      la(5L), fa(0.4f, -0.3f, 1.4f, 0.8f), idBound)
 
   // (name, expression bound over its input row, the input row)
   private val cases: Seq[(String, Expression, GenericInternalRow)] = Seq(
@@ -107,7 +117,32 @@ class CodegenCompileSpec extends AnyFunSuite {
         new GenericArrayData(Array[Any](3L, -1L)),
         fa(0.5f, -0.25f, 1.5f, 0.75f, 1.0f, 2.0f, -0.5f, 0.25f),
         new GenericArrayData(Array[Any](5L)),
-        fa(0.4f, -0.3f, 1.4f, 0.8f))))
+        fa(0.4f, -0.3f, 1.4f, 0.8f))),
+    // Entry 7 is admitted (Hamming 1 <= 2) at rounded cosine >= 0.9; with
+    // idBound 7 the scan stops before it and the answer flips to false.
+    ("HammingCosineReject/hit", hammingReject, hammingRejectRow(Long.MaxValue)),
+    ("HammingCosineReject/bounded", hammingReject, hammingRejectRow(7L)),
+    // Edge inputs: a null token (skipped by the shingle join, <unk> for
+    // BPE), an empty set, operands of unequal length, nprobe > k.
+    ("ShingleJoin/null-token", ShingleJoin(in(0, strArr), 2),
+      row(new GenericArrayData(Array[Any](
+        UTF8String.fromString("a"), null, UTF8String.fromString("b"))))),
+    ("GreedyBpeTokens/null-word", GreedyBpeTokens(in(0, strArr)),
+      row(new GenericArrayData(Array[Any](UTF8String.fromString("spark"), null)))),
+    ("MinHashSignature/empty", MinHashSignature(in(0, strArr)), row(sa())),
+    ("SimHashSignature/empty", SimHashSignature(in(0, strArr)), row(sa())),
+    ("CosineSimilarity/unequal-length", CosineSimilarity(in(0, floatArr), in(1, floatArr)),
+      row(fa(1.0f, 2.0f, 3.0f), fa(-2.0f, 0.5f))),
+    ("NearestCentroids/nprobe>k", NearestCentroids(in(0, floatArr), cents, 4, 5),
+      row(fa(0.5f, -0.25f, 1.5f, 0.75f))),
+    ("ResidualTo/double-short", ResidualTo(in(0, ArrayType(DoubleType)), in(1, IntegerType), cents, 4),
+      row(new GenericArrayData(Array[Any](0.5, -0.25)), 1)),
+    ("PqAdc/short-codes", PqAdc(
+      in(0, ArrayType(ArrayType(DoubleType))), in(1, ArrayType(IntegerType))),
+      row(new GenericArrayData(Array[Any](
+        new GenericArrayData(Array(0.25, 1.5, 2.0)),
+        new GenericArrayData(Array(3.0, 0.75, 0.1)))),
+        new GenericArrayData(Array[Any](2)))))
 
   for ((name, expr, input) <- cases) {
     test(s"$name: generated code compiles and matches interpreted eval") {
@@ -125,15 +160,20 @@ class CodegenCompileSpec extends AnyFunSuite {
     }
   }
 
+  test("HammingCosineReject cases cover both answers") {
+    val gen = GenerateUnsafeProjection.generate(Seq(hammingReject),
+      subexpressionEliminationEnabled = false)
+    assert(gen(hammingRejectRow(Long.MaxValue)).getBoolean(0))
+    assert(!gen(hammingRejectRow(7L)).getBoolean(0))
+  }
+
   test("null inputs stay null through the compiled path") {
-    val exprs = Seq[(String, Expression)](
-      ("MinHashSignature", MinHashSignature(in(0, strArr))),
-      ("CosineSimilarity", CosineSimilarity(in(0, floatArr), in(1, floatArr))),
-      ("NearestCentroids", NearestCentroids(in(0, floatArr), cents, 4, 2)))
-    val nullRow = row(null, null)
-    for ((name, e) <- exprs) {
+    for ((name, e, _) <- cases) {
+      val nullRow = row(Seq.fill(e.children.size)(null): _*)
       val gen = GenerateUnsafeProjection.generate(Seq(e), subexpressionEliminationEnabled = false)
-      assert(gen(nullRow).isNullAt(0), s"$name: null in must be null out")
+      val interp = InterpretedUnsafeProjection.createProjection(Seq(e))
+      assert(gen(nullRow).isNullAt(0), s"$name: null in must be null out (compiled)")
+      assert(interp(nullRow).isNullAt(0), s"$name: null in must be null out (interpreted)")
     }
   }
 }

@@ -38,4 +38,14 @@ class ShingleJoinSpec extends SharedSparkSpec {
       .select(shingles(col("tk"), 5).as("sh"))
     assert(df.head().getSeq[String](0).isEmpty)
   }
+
+  test("null tokens: kernel == the old form (both skip nulls in the join)") {
+    val spark2 = spark; import spark2.implicits._
+    val df = Seq(Seq("a", null, "b", "c")).toDF("tk")
+    for (k <- Seq(2, 3)) {
+      val r = df.select(shingles(col("tk"), k), oldShingles(col("tk"), k)).head()
+      assert(r.getSeq[String](0) == r.getSeq[String](1), s"k=$k")
+    }
+    assert(df.select(shingles(col("tk"), 2)).head().getSeq[String](0) == Seq("a", "b", "b c"))
+  }
 }

@@ -122,6 +122,21 @@ class PqSpec extends SharedSparkSpec {
     }
   }
 
+  test("ADC and residual cover only the shorter operand, never null-padded") {
+    val spark2 = spark; import spark2.implicits._
+    val lut = Seq(Seq(0.25, 1.5), Seq(3.0, 0.75), Seq(0.5, 2.0))
+    val r = Seq((lut, Seq(1, 0), Seq(0.5f, -0.25f))).toDF("lut", "codes", "emb")
+      .select(
+        graft.functions.PqCodec.adc(col("lut"), col("codes")),
+        graft.functions.ResidualTo(col("emb"), lit(1),
+          IndexedSeq(0.0, 0.0, 0.0, 1.0, 2.0, 3.0), 3))
+      .head()
+    // 3 LUT rows, 2 codes: subspace 2 is left out of the sum.
+    assert(r.getDouble(0) == 1.5 + 3.0)
+    // 2 elements, dim 3: the residual has 2 elements.
+    assert(r.getSeq[Double](1) == Seq(0.5 - 1.0, -0.25 - 2.0))
+  }
+
   test("q140 residual IVF-PQ: shape, determinism, recall@5 beats the raw-vector floor") {
     val res = topk(SimilarityQueries.q140.run(spark, sf001))
     assert(res.length == 50)

@@ -150,4 +150,19 @@ class LayoutWriterSpec extends SharedSparkSpec {
       .agg(sum("value")).collect().head.getDouble(0)
     assert(math.abs(others - expected) < 1e-9)
   }
+
+  test("spark.graft.audit.buckets: default 8, a bad value fails naming the key") {
+    val key = "spark.graft.audit.buckets"
+    assert(spark.conf.getOption(key).isEmpty)
+    assert(LayoutWriter.auditBuckets(spark) == 8)
+    try {
+      spark.conf.set(key, "16")
+      assert(LayoutWriter.auditBuckets(spark) == 16)
+      for (bad <- Seq("eight", "0", "-3")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](LayoutWriter.auditBuckets(spark))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
+      }
+    } finally spark.conf.unset(key)
+  }
 }
